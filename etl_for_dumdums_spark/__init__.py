@@ -16,7 +16,8 @@ Layout:
   catalog/     — the operator inventory (SURVEY.md §2) as named queries,
                  each paired with a DuckDB oracle SQL string
   operators/   — reusable large-scale operators: dedup, similarity, text,
-                 multimodal plumbing
+                 multimodal plumbing (PNG/GIF/BMP/ICO + WAV/AIFF/AU
+                 decode, raw RGB8/PCM1 kernels)
   sources/     — Source connector contract + parquet/synthetic connectors
   models/      — reference dbt DAG re-expressed as DataFrame builders
   streaming/   — Structured Streaming surface over the events table

@@ -799,42 +799,6 @@ def dedup_cc_groups(spark, sf_dir):
     return _cc_groups(t.documents)
 
 
-def _cc_labels_minlabel(cand):
-    """Min-label propagation over the candidate pair graph — the r9 form,
-    kept as the pin-test twin of ``_cc_labels_star`` (identical fixpoint:
-    every node labelled with its component's minimum doc_id). Converges in
-    O(graph diameter) full-edge-join rounds, which is exactly why the
-    query itself now uses the star contraction instead (r10 opt)."""
-    cand = cand.cache()
-    nodes = cand.select(F.col("da").alias("node")).union(cand.select("db")).distinct()
-    edges = cand.select(F.col("da").alias("src"), F.col("db").alias("dst"))
-    edges = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).cache()
-
-    labels = nodes.withColumn("lbl", F.col("node")).localCheckpoint(eager=True)
-    # convergence via the label-sum invariant: labels are per-node monotone
-    # nonincreasing, so sum(lbl) strictly decreases iff ANY label changed
-    prev_sum = labels.agg(F.sum("lbl")).collect()[0][0]
-    for _ in range(_CC_MAX_ITERS):
-        prop = edges.join(labels, edges["src"] == labels["node"]).select(
-            F.col("dst").alias("node"), "lbl"
-        )
-        new_labels = (
-            labels.select("node", "lbl")
-            .union(prop)
-            .groupBy("node")
-            .agg(F.min("lbl").alias("lbl"))
-            .localCheckpoint(eager=True)  # truncate per-iteration lineage
-        )
-        new_sum = new_labels.agg(F.sum("lbl")).collect()[0][0]
-        labels = new_labels
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    return labels.select("node", "lbl")
-
-
 def _cc_labels_star(cand, iters_out: list | None = None):
     """Connected-component labels via alternating large-star/small-star
     contraction (Kiveris et al., "Connected Components in MapReduce and
@@ -855,8 +819,9 @@ def _cc_labels_star(cand, iters_out: list | None = None):
     one-sided difference.
 
     Returns (node, lbl) with lbl = the component's minimum doc_id — the
-    same fixpoint as ``_cc_labels_minlabel`` (pinned on real data plus
-    synthetic chain/star graphs in tests/test_optimization_r10.py).
+    same fixpoint as min-label propagation (pinned against the
+    ``_cc_labels_minlabel`` reference on real data plus synthetic
+    chain/star graphs in tests/test_optimization_r10.py).
     ``iters_out`` (optional list) receives the round count — on a length-n
     chain it is ~log2(n), pinned by test."""
     from pyspark.sql import Window as _W

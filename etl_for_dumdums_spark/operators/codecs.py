@@ -283,7 +283,7 @@ def decode_png(payload: bytes):
         alpha = np.where(key_mask, 0, 255).astype(np.uint8)[..., None]
         rgb = np.repeat(px, 3, axis=2) if color_type == 0 else px
         return np.concatenate([rgb, alpha], axis=2)
-    if color_type == 0:  # grayscale → RGB (same contract as JPEG gray)
+    if color_type == 0:  # grayscale → RGB (the (h, w, 3) contract rgb_stats reads)
         return np.repeat(px, 3, axis=2)
     if color_type == 4:  # gray+alpha → RGBA
         return np.concatenate([np.repeat(px[..., :1], 3, axis=2), px[..., 1:]], axis=2)

@@ -9,31 +9,22 @@ Decode support comes in three honest tiers:
   ``pcm_stats`` route these to full decodes.
 * REAL raw kernels: the self-describing RGB8/PCM1 formats below (what a
   production decode stage emits) — numpy only.
-* REAL JPEG (operators/jpeg.py): baseline SOF0 and progressive SOF2,
-  first-principles DCT + Huffman, interop-verified against libjpeg files.
-* REAL video (operators/video.py): the AVI/RIFF container with MJPEG
-  (via the in-repo JPEG codec) and raw BI_RGB DIB frames — header-only
-  probe, idx1 index-seeked frame sampling, ``video_stats`` kernel.
-* REAL GIF + BMP (operators/gif.py): full LZW (variable width, dict
-  reset, interlace), multi-frame animations with transparency and
-  disposal; BI_RGB BMP at 8 (paletted) / 24 / 32 bits, both rasters.
-* REAL TIFF (operators/tiff.py): baseline 6.0, both byte orders —
-  none/LZW (MSB-first early-change variant)/deflate/PackBits,
-  horizontal predictor, gray/RGB/RGBA/palette, multi-strip.
+* REAL GIF + BMP + ICO (operators/gif.py): full LZW (variable width,
+  dict reset, interlace), multi-frame animations with transparency and
+  disposal; BI_RGB/RLE BMP at 4/8 (paletted) / 24 / 32 bits, both
+  rasters; ICO favicons with BMP or PNG entries.
 * REAL AIFF/AIFC + Sun AU (operators/aiff.py): big-endian PCM at
   8/16/24/32 bits, 80-bit extended sample rates, 'sowt', and AU's
   G.711 mu-law/A-law via the codecs.py tables — the same payload
   wrapped as WAV, AIFF, or AU yields identical pcm_stats rows.
 * REAL WebP container probe (operators/webp.py): is_webp +
   probe_webp parse VP8X/VP8/VP8L headers (dims, alpha, animation,
-  losslessness) without touching pixels, interop-verified against the
-  real CPython .webp asset; pixel decode stays gated (no VP8L stream
-  exists in-container to verify a from-scratch decoder against).
-* STUBS behind NotImplementedError: everything else (WebP pixel
-  decode/mp3, inter-frame video codecs — these need PIL/opencv/ffmpeg,
-  absent here); ``fake=True`` gives a deterministic digest-derived
-  stand-in so pipelines and tests exercise the full Spark path with
-  realistic shapes.
+  losslessness) without touching pixels; pixel decode stays gated.
+* STUBS behind NotImplementedError: every other format (JPEG, TIFF,
+  WebP pixels, mp3, video); ``fake=True`` gives a deterministic
+  digest-derived stand-in so pipelines and tests exercise the full
+  Spark path with realistic shapes. The stats kernels emit NULL rows
+  for these payloads.
 
 Everything Spark-side is real and tested regardless of tier: schemas,
 Arrow batch shapes, mapInPandas signatures, and partition-size control.
@@ -80,56 +71,37 @@ FEATURE_SCHEMA = T.StructType(
 
 def image_payload_to_array(payload: bytes):
     """Route an image payload to a REAL decode: PNG (operators/codecs.py),
-    JPEG — baseline AND progressive (operators/jpeg.py), GIF (first
-    coalesced frame) / BMP / ICO favicons (operators/gif.py), TIFF
-    (operators/tiff.py),
-    or self-describing RGB8 raw. Returns (h, w, ch) uint8 with ch >= 3:
-    single-channel decodes (grayscale TIFF) are replicated to RGB here so
-    every downstream ``[:, :, :3]`` reduction sees the same contract the
-    PNG/JPEG decoders honor natively. Raises NotImplementedError for codec
-    formats without an in-container decoder (WebP/arithmetic-JPEG/...) —
+    GIF (first coalesced frame) / BMP / ICO favicons (operators/gif.py),
+    or self-describing RGB8 raw. Returns (h, w, ch) uint8 with ch >= 3
+    (PNG grayscale is replicated to RGB by the decoder). Raises
+    NotImplementedError for every other format (JPEG, TIFF, WebP, ...) —
     the honest gate."""
-    import numpy as np
-
     from .codecs import decode_png, is_png
     from .gif import decode_bmp, decode_gif, decode_ico, is_bmp, is_gif, is_ico
-    from .jpeg import decode_jpeg, is_jpeg
-    from .tiff import decode_tiff, is_tiff
     from .webp import decode_webp, is_webp
 
     if is_webp(payload):
         return decode_webp(bytes(payload))  # raises the documented gate
     if is_png(payload):
-        a = decode_png(bytes(payload))
-    elif is_jpeg(payload):
-        a = decode_jpeg(bytes(payload))
-    elif is_gif(payload):
-        a = decode_gif(bytes(payload))[0][0]
-    elif is_bmp(payload):
-        a = decode_bmp(bytes(payload))
-    elif is_tiff(payload):
-        a = decode_tiff(bytes(payload))
-    elif is_ico(payload):
-        a = decode_ico(bytes(payload))
-    else:
-        a = decode_rgb_raw(bytes(payload) if payload is not None else None)
-    if a.ndim == 2:
-        a = a[:, :, None]
-    if a.shape[2] == 1:
-        a = np.repeat(a, 3, axis=2)
-    return a
+        return decode_png(bytes(payload))
+    if is_gif(payload):
+        return decode_gif(bytes(payload))[0][0]
+    if is_bmp(payload):
+        return decode_bmp(bytes(payload))
+    if is_ico(payload):
+        return decode_ico(bytes(payload))
+    return decode_rgb_raw(bytes(payload) if payload is not None else None)
 
 
 def decode_image(payload: bytes, fake: bool = False) -> list[float]:
     """Decode an image payload to an 8-dim feature vector.
 
-    REAL for every decodable format (PNG, JPEG baseline + progressive,
-    GIF, BMP, TIFF, ICO, RGB8-raw): per-channel means + brightness +
-    normalized dimensions, all deterministic byte arithmetic. With
-    ``fake=True`` returns a digest-derived stand-in instead (the
-    pre-codec behavior, kept for pipeline-shape tests). Formats without
-    an in-container decoder (WebP, arithmetic JPEG) raise
-    NotImplementedError.
+    REAL for every decodable format (PNG, GIF, BMP, ICO, RGB8-raw):
+    per-channel means +
+    brightness + normalized dimensions, all deterministic byte
+    arithmetic. With ``fake=True`` returns a digest-derived stand-in
+    instead (the pre-codec behavior, kept for pipeline-shape tests).
+    Other formats raise NotImplementedError.
     """
     if fake:
         digest = hashlib.sha256(payload or b"").digest()
@@ -222,15 +194,14 @@ def resize_payload(payload: bytes, width: int, height: int, fake: bool = False) 
     """Resize an image payload.
 
     REAL for every decodable format (decode → nearest-neighbor →
-    re-encode, format family preserved: PNG→PNG, JPEG→JPEG, GIF→GIF
-    — first coalesced frame of an animation, still ≤256 colors under
+    re-encode, format family preserved: PNG→PNG, GIF→GIF — first
+    coalesced frame of an animation, still ≤256 colors under
     nearest-neighbor so the palette re-encode is exact — BMP→24/32-bit
-    BMP, TIFF→TIFF, ICO→PNG-entry ICO) and RGB8-raw payloads;
-    deterministic integer index maps so every engine/run produces
-    identical bytes. With ``fake=True`` returns a digest-derived
-    pseudo-payload sized proportionally to the target area (kept for
-    pipeline-shape tests). Formats without an in-container decoder
-    raise NotImplementedError."""
+    BMP, ICO→PNG-entry ICO) and RGB8-raw payloads; deterministic integer
+    index maps so every engine/run produces identical bytes. With ``fake=True`` returns a
+    digest-derived pseudo-payload sized proportionally to the target
+    area (kept for pipeline-shape tests). Other formats raise
+    NotImplementedError."""
     if fake:
         seed = hashlib.sha256((payload or b"") + f"{width}x{height}".encode()).digest()
         target_len = max(16, (width * height) // 64)
@@ -238,26 +209,16 @@ def resize_payload(payload: bytes, width: int, height: int, fake: bool = False) 
         return (seed * reps)[:target_len]
     from .codecs import encode_png, is_png
     from .gif import encode_bmp, encode_gif, encode_ico, is_bmp, is_gif, is_ico
-    from .jpeg import encode_jpeg, is_jpeg
-    from .tiff import encode_tiff, is_tiff
 
     encoders = (
         (is_png, encode_png),
-        (is_jpeg, lambda a: encode_jpeg(a[:, :, :3])),
         (is_gif, encode_gif),
         (is_bmp, encode_bmp),
-        (is_tiff, encode_tiff),
         (is_ico, encode_ico),
     )
     for probe, enc in encoders:
         if probe(payload):
-            import numpy as np
-
-            a = image_payload_to_array(payload)
-            sh, sw = a.shape[:2]
-            yi = (np.arange(height, dtype=np.int64) * sh) // height
-            xi = (np.arange(width, dtype=np.int64) * sw) // width
-            return enc(a[yi][:, xi])
+            return enc(_nearest(image_payload_to_array(payload), width, height))
     return resize_rgb_raw(payload, width, height)
 
 
@@ -294,7 +255,7 @@ def resize_images(
 # ---------------------------------------------------------------------------
 # REAL kernels for RAW payloads (no codec needed): a self-describing
 # uncompressed RGB format — b"RGB8" magic + uint32-BE width + uint32-BE
-# height + w·h·3 interleaved RGB bytes. Compressed formats (JPEG/PNG/…)
+# height + w·h·3 interleaved RGB bytes. Compressed formats without a decoder above
 # stay behind the honest NotImplementedError gates above; for raw frames
 # (exactly what a production video-decode stage emits) decode, feature
 # extraction, and resize below are the real thing, in numpy, over Arrow
@@ -335,28 +296,29 @@ def resize_rgb_raw(payload: bytes, width: int, height: int) -> bytes:
     """Nearest-neighbor resize of a raw RGB8 payload — deterministic
     integer index maps (src_i = i·src/dst floored), so every engine/run
     produces identical bytes."""
+    return encode_rgb_raw(_nearest(decode_rgb_raw(payload), width, height))
+
+
+def _nearest(a, width: int, height: int):
+    """Nearest-neighbor resample of an (h, w, ch) array with floored
+    integer index maps (src_i = i·src/dst)."""
     import numpy as np
 
-    a = decode_rgb_raw(payload)
     sh, sw = a.shape[:2]
     yi = (np.arange(height, dtype=np.int64) * sh) // height
     xi = (np.arange(width, dtype=np.int64) * sw) // width
-    return encode_rgb_raw(a[yi][:, xi])
+    return a[yi][:, xi]
 
 
 def rgb_stats(media: DataFrame) -> DataFrame:
     """mapInPandas REAL feature extraction for every decodable image
-    format (RGB8-raw, PNG, JPEG baseline+progressive, GIF, BMP, TIFF,
-    ICO): decoded dimensions + per-channel means + brightness, one
-    vectorized numpy reduction per image. Payloads without an
-    in-container decoder (WebP, arithmetic-coded JPEG) pass through
-    with NULLs — the honest gate."""
+    format (RGB8-raw, PNG, GIF, BMP, ICO): decoded dimensions + per-channel means +
+    brightness, one vectorized numpy reduction per image. Other payloads
+    pass through with NULLs — the honest gate."""
     import numpy as np
 
     from .codecs import is_png
     from .gif import is_bmp, is_gif, is_ico
-    from .jpeg import is_jpeg
-    from .tiff import is_tiff
 
     schema = T.StructType(
         [
@@ -378,10 +340,8 @@ def rgb_stats(media: DataFrame) -> DataFrame:
                 if p is None or not (
                     head[:4] == RAW_RGB_MAGIC
                     or is_png(head)
-                    or is_jpeg(head[:2])
                     or is_gif(head)
                     or is_bmp(head)
-                    or is_tiff(head)
                     or is_ico(head)
                 ):
                     rows.append((mid, None, None, None, None, None, None))
@@ -389,8 +349,8 @@ def rgb_stats(media: DataFrame) -> DataFrame:
                 try:
                     a = image_payload_to_array(bytes(p))[:, :, :3]
                 except (NotImplementedError, ValueError, struct.error):
-                    # NotImplementedError: no in-container decoder (e.g.
-                    # unsupported JPEG mode); ValueError: valid magic but
+                    # NotImplementedError: no in-container decoder (e.g. a
+                    # spec-illegal PNG shape); ValueError: valid magic but
                     # malformed body — both pass through as NULLs instead
                     # of killing the task (r4 advice findings #1/#2)
                     rows.append((mid, None, None, None, None, None, None))

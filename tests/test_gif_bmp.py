@@ -1,6 +1,6 @@
 """GIF/BMP codec tests (operators/gif.py).
 
-Same policy as test_codecs/test_jpeg/test_video: byte-exact roundtrips
+Same policy as test_codecs: byte-exact roundtrips
 (both formats are lossless for palette-sized inputs), plus
 independently-constructed byte streams — a GIF whose LZW data is packed
 by a separate bit-writer written in this test from the spec, an
@@ -392,15 +392,14 @@ def test_bmp_bitfields_still_gated():
 
 
 def test_resize_payload_preserves_new_format_families():
-    """resize_payload: GIF/BMP/TIFF/ICO payloads resize via decode ->
+    """resize_payload: GIF/BMP/ICO payloads resize via decode ->
     nearest-neighbor -> re-encode in the same family, byte-decodable and
-    value-exact (all four re-encodes are lossless here)."""
+    value-exact (all three re-encodes are lossless here)."""
     from etl_for_dumdums_spark.operators.gif import encode_ico
     from etl_for_dumdums_spark.operators.multimodal import (
         image_payload_to_array,
         resize_payload,
     )
-    from etl_for_dumdums_spark.operators.tiff import encode_tiff
 
     rng = np.random.RandomState(13)
     img = (rng.randint(0, 4, (12, 16, 3)) * 70).astype(np.uint8)
@@ -412,7 +411,6 @@ def test_resize_payload_preserves_new_format_families():
     cases = [
         (encode_gif(img), is_gif, exp),
         (encode_bmp(img), is_bmp, exp),
-        (encode_tiff(img), None, exp),
         (encode_ico(rgba), None, np.dstack([exp, np.full((6, 8), 255, np.uint8)])),
     ]
     for payload, probe, want in cases:

@@ -1,5 +1,4 @@
-"""Third-party-encoder interop for the GIF decoder — the same strategy
-as test_jpeg.py's libjpeg checks: the container ships real GIFs written
+"""Third-party-encoder interop for the GIF decoder: the container ships real GIFs written
 by real encoders (Tk's logo set, libxslt's doc diagrams — GIF87a AND
 GIF89a, sizes up to 668x520, palettes from 2 to 255 colors). A
 desynchronized LZW decoder essentially cannot terminate cleanly with

@@ -5,6 +5,9 @@ cases), same protocol as tests/test_optimization_r09.py."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
+
+from etl_for_dumdums_spark.catalog.dedup import _CC_MAX_ITERS
 
 from .conftest import SF_SMOKE
 
@@ -73,11 +76,44 @@ def _labels(df):
     return sorted((r["node"], r["lbl"]) for r in df.collect())
 
 
+def _cc_labels_minlabel(cand):
+    """Min-label propagation over the candidate pair graph — the r9 form,
+    kept as the pin-test twin of ``_cc_labels_star`` (identical fixpoint:
+    every node labelled with its component's minimum doc_id). Converges in
+    O(graph diameter) full-edge-join rounds, which is exactly why the
+    query itself now uses the star contraction instead (r10 opt)."""
+    cand = cand.cache()
+    nodes = cand.select(F.col("da").alias("node")).union(cand.select("db")).distinct()
+    edges = cand.select(F.col("da").alias("src"), F.col("db").alias("dst"))
+    edges = edges.union(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).cache()
+
+    labels = nodes.withColumn("lbl", F.col("node")).localCheckpoint(eager=True)
+    # convergence via the label-sum invariant: labels are per-node monotone
+    # nonincreasing, so sum(lbl) strictly decreases iff ANY label changed
+    prev_sum = labels.agg(F.sum("lbl")).collect()[0][0]
+    for _ in range(_CC_MAX_ITERS):
+        prop = edges.join(labels, edges["src"] == labels["node"]).select(
+            F.col("dst").alias("node"), "lbl"
+        )
+        new_labels = (
+            labels.select("node", "lbl")
+            .union(prop)
+            .groupBy("node")
+            .agg(F.min("lbl").alias("lbl"))
+            .localCheckpoint(eager=True)  # truncate per-iteration lineage
+        )
+        new_sum = new_labels.agg(F.sum("lbl")).collect()[0][0]
+        labels = new_labels
+        if new_sum == prev_sum:
+            break
+        prev_sum = new_sum
+    return labels.select("node", "lbl")
+
+
 def test_cc_star_matches_minlabel_on_synthetic_graphs(spark):
-    from etl_for_dumdums_spark.catalog.dedup import (
-        _cc_labels_minlabel,
-        _cc_labels_star,
-    )
+    from etl_for_dumdums_spark.catalog.dedup import _cc_labels_star
 
     cases = {
         # chain short enough for min-label's _CC_MAX_ITERS to converge
@@ -95,7 +131,6 @@ def test_cc_star_matches_minlabel_on_synthetic_graphs(spark):
 
 def test_cc_star_matches_minlabel_on_real_candidates(spark):
     from etl_for_dumdums_spark.catalog.dedup import (
-        _cc_labels_minlabel,
         _cc_labels_star,
         _minhash_candidates,
     )
