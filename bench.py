@@ -23,7 +23,7 @@ from etl_for_dumdums_spark.catalog import (
     TABLE_NAMES,
     load_all,
 )
-from etl_for_dumdums_spark.session import get_spark
+from etl_for_dumdums_spark.session import get_spark, release
 
 # Headline set: one representative per operator family (kept in sync with
 # the catalog as families land). Each must exist in QUERIES.
@@ -177,10 +177,10 @@ def main() -> None:
         except Exception as exc:  # pragma: no cover
             print(f"bench: {name} failed: {exc}", file=sys.stderr)
             timings[name] = -1.0
-        # drop caches a query may have left behind (e.g. dedup_minhash_lsh's
-        # shared candidate set): accumulated cache + broadcast blocks were
-        # inflating LATER queries up to 20x at 10x-scale inputs
-        spark.catalog.clearCache()
+        # release what the query pinned (e.g. dedup_minhash_lsh's shared
+        # candidate set) after its last run: every persisted intermediate
+        # goes through session.pin and lives until this release
+        release()
 
     total = round(sum(v for v in timings.values() if v >= 0), 3)
     # SPARK_GRAFT_BENCH_CONTROL=0 skips the control (scale-up runs where the

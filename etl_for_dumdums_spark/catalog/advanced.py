@@ -13,6 +13,7 @@ import os
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..session import pin
 from . import ROUND_DP as DP
 from . import Tables, register
 from .sketches import _h_spark, _h_sql
@@ -428,12 +429,12 @@ def join_asof_nearest(spark, sf_dir):
 # NTILE decile profiling WITHOUT a global sort window: rank customers into
 # 10 account-balance deciles and profile each with exact integer-cent means.
 # A naive ntile() OVER (ORDER BY ...) funnels the whole table through ONE
-# task — the single-partition-window scale killer. Instead: repartitionByRange
-# on the (acctbal, custkey) total order, row_number within each range
-# partition, add the collected per-partition offsets (32 small ints — the
-# documented tiny-by-construction collect), and apply SQL ntile's exact
-# floor-division fill rule in closed form from the global rank. Result is
-# bit-identical to the oracle's ntile() at any scale, with no global sort.
+# task — the single-partition-window scale killer. Instead
+# operators/ranked.global_ntile takes the global rank over the (acctbal,
+# custkey) total order from ranged_prefix (range partitions, local
+# row_number, collected per-partition offsets) and applies SQL ntile's
+# exact floor-division fill rule in closed form. Result is bit-identical
+# to the oracle's ntile() at any scale, with no global sort.
 # ---------------------------------------------------------------------------
 @register(
     "win_ntile_deciles",
@@ -454,45 +455,16 @@ def join_asof_nearest(spark, sf_dir):
     """,
 )
 def win_ntile_deciles(spark, sf_dir):
+    from ..operators.ranked import global_ntile
+
     t = Tables(spark, sf_dir)
-    nparts = 32
     base_df = t.customer.select(
         "c_custkey",
         "c_acctbal",
         "c_mktsegment",
         F.round(F.col("c_acctbal") * 100).cast("long").alias("cents"),
     )
-    ranged = (
-        base_df.repartitionByRange(nparts, "c_acctbal", "c_custkey")
-        .withColumn("pid", F.spark_partition_id())
-        .cache()
-    )
-    counts = {
-        r["pid"]: r["n"]
-        for r in ranged.groupBy("pid").agg(F.count("*").alias("n")).collect()
-    }
-    total = sum(counts.values())
-    offsets, acc = [], 0
-    for pid in sorted(counts):
-        offsets.append((pid, acc))
-        acc += counts[pid]
-    off_df = spark.createDataFrame(offsets, "pid int, off long")
-    wloc = W.partitionBy("pid").orderBy("c_acctbal", "c_custkey")
-    base_sz, rem = total // 10, total % 10
-    pivot = rem * (base_sz + 1)
-    if base_sz == 0:
-        decile_expr = "CAST(r AS INT)"
-    else:
-        decile_expr = (
-            f"CAST(CASE WHEN r <= {pivot} THEN (r - 1) DIV {base_sz + 1} + 1 "
-            f"ELSE {rem} + (r - 1 - {pivot}) DIV {base_sz} + 1 END AS INT)"
-        )
-    ranked = (
-        ranged.withColumn("lr", F.row_number().over(wloc))
-        .join(F.broadcast(off_df), "pid")
-        .withColumn("r", F.col("off") + F.col("lr"))
-        .withColumn("decile", F.expr(decile_expr))
-    )
+    ranked = global_ntile(spark, base_df, 10, ["c_acctbal", "c_custkey"], "decile")
     return (
         ranked.groupBy("decile")
         .agg(
@@ -871,7 +843,7 @@ def ops_join_cardinality(spark, sf_dir):
     )
     hist = ca.join(cb, "k").select(
         "k", (F.col("na") * F.col("nb")).alias("prod")
-    ).cache()  # read by the exact AND sampled predictors
+    ).transform(pin)  # read by the exact AND sampled predictors
     exact = hist.agg(F.sum("prod").cast("bigint").alias("predicted"))
     sampled = (
         hist.filter(

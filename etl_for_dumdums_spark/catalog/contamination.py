@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..session import pin
 from . import ROUND_DP as DP
 from . import Tables, register
 from .sketches import _h_spark, _h_sql
@@ -123,13 +124,13 @@ def _kmv_sql() -> str:
 def sketch_kmv_overlap(spark, sf_dir):
     """KMV union/intersection/Jaccard estimates vs exact, one row."""
     t = Tables(spark, sf_dir)
-    sh = _shingles(t).cache()
+    sh = pin(_shingles(t))
     k = _KMV_K
     a = sh.filter(F.col("split") == 0).select("h").distinct()
     b = sh.filter(F.col("split") == 1).select("h").distinct()
     # global ascending top-k: per-partition partial top-k + k-row merge
-    ka = a.orderBy("h").limit(k).cache()
-    kb = b.orderBy("h").limit(k).cache()
+    ka = pin(a.orderBy("h").limit(k))
+    kb = pin(b.orderBy("h").limit(k))
     ku = ka.union(kb).distinct().orderBy("h").limit(k)
     tau = ku.agg(F.max("h").alias("tau"))
     ki = (

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..session import pin
 from . import Tables, register
 from .dedup import _MAX_BUCKET, _mh_bands_sql, _mh_sig_select_sql
 from .textops import _hits_sql
@@ -103,7 +104,7 @@ def corpus_clean_report(spark, sf_dir):
     # counts are byte-identical; only the evaluation count changed.
     from pyspark.sql import Window
 
-    gated = gate_documents(docs).cache()
+    gated = pin(gate_documents(docs))
     w_exact = Window.partitionBy(F.md5("text")).orderBy("doc_id")
     exact = (
         gated.withColumn("_rn", F.row_number().over(w_exact))
@@ -115,7 +116,7 @@ def corpus_clean_report(spark, sf_dir):
         exact.withColumn("_rn", F.row_number().over(w_fp))
         .filter(F.col("_rn") == 1)
         .select("doc_id", "text", "predicted_lang", "n_tokens", "quality_bucket")
-        .cache()
+        .transform(pin)
     )
     cand = minhash_neardup_candidates(deduped)
     drops = cand.select(F.col("db").alias("doc_id")).distinct()

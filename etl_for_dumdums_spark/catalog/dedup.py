@@ -29,6 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..session import pin, release
 from . import ROUND_DP as DP
 from . import Tables, register
 
@@ -334,7 +335,7 @@ def dedup_minhash_lsh(spark, sf_dir):
 
     sized = bands.withColumn(
         "bucket_size", F.count("*").over(_W.partitionBy("band", "key"))
-    ).cache()
+    ).transform(pin)
     small = sized.filter(F.col("bucket_size") <= _MAX_BUCKET).select("doc_id", "band", "key")
     left = small.alias("a")
     right = small.alias("b")
@@ -511,7 +512,7 @@ def dedup_ngram_jaccard(spark, sf_dir):
         sh0.withColumn("df", F.count("*").over(_W.partitionBy("h")))
         .filter(F.col("df") <= _MAX_SHINGLE_DF)
         .select("doc_id", "h")
-        .cache()
+        .transform(pin)
     )
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
     x = sh.alias("x")
@@ -652,7 +653,7 @@ def dedup_simhash64(spark, sf_dir):
     # one row per doc, 5 narrow columns — cached because FOUR subtrees read
     # it (band explode, the x/y verification sides, candidate count); without
     # the cache the 64-bit-vote token aggregation runs once per reader
-    bandvals = votes.selectExpr("doc_id", *_sh64_band_exprs()).cache()
+    bandvals = pin(votes.selectExpr("doc_id", *_sh64_band_exprs()))
     band_structs = F.array(
         *[
             F.struct(F.lit(i).alias("band"), F.col(f"b{i}").alias("key"))
@@ -668,7 +669,7 @@ def dedup_simhash64(spark, sf_dir):
 
     sized = bands.withColumn(
         "bucket_size", F.count("*").over(_W.partitionBy("band", "key"))
-    ).cache()
+    ).transform(pin)
     small = sized.filter(F.col("bucket_size") <= _MAX_BUCKET).select("doc_id", "band", "key")
     a, b = small.alias("a"), small.alias("b")
     cand = (
@@ -680,7 +681,7 @@ def dedup_simhash64(spark, sf_dir):
         )
         .select(F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
         .distinct()
-        .cache()  # read by the verification join AND the candidate count
+        .transform(pin)  # read by the verification join AND the candidate count
     )
     x = bandvals.select(
         F.col("doc_id").alias("da"), *[F.col(f"b{i}").alias(f"xa{i}") for i in range(_SH64_BANDS)]
@@ -692,7 +693,7 @@ def dedup_simhash64(spark, sf_dir):
         F.bit_count(F.col(f"xa{i}").bitwiseXOR(F.col(f"yb{i}"))) for i in range(_SH64_BANDS)
     )
     verified = cand.join(x, "da").join(y, "db").select("da", "db", hamming.alias("hamming"))
-    confirmed = verified.filter(F.col("hamming") <= _SH64_HAM_MAX).cache()
+    confirmed = pin(verified.filter(F.col("hamming") <= _SH64_HAM_MAX))
     flagged = confirmed.select(F.col("da").alias("d")).union(
         confirmed.select("db")
     ).distinct()
@@ -710,12 +711,12 @@ def dedup_simhash64(spark, sf_dir):
 # Transitive dedup groups: EXACT connected components over the MinHash
 # candidate-pair graph — the "union-find" semantics every near-dup operator
 # above approximates with the single-pass smaller-id reduction. Spark side:
-# Pregel-style iterative min-label propagation (one key-shuffle join per
-# iteration, iteration count = graph diameter; lineage truncated per step
-# with localCheckpoint — the canonical iterative-algorithm pattern, NOT a
-# driver-side row loop). Oracle side: the same fixpoint as a DuckDB
-# recursive CTE (min reachable node id per node). Both engines provably
-# converge to min-node-id-per-component, so results are bit-identical.
+# iterative large-star/small-star contraction (O(log n) rounds; lineage
+# truncated per round with pin(truncate=True) — the canonical
+# iterative-algorithm pattern, NOT a driver-side row loop). Oracle side:
+# the same fixpoint as a DuckDB recursive CTE (min reachable node id per
+# node). Both engines provably converge to min-node-id-per-component, so
+# results are bit-identical.
 #
 # The result also demonstrates WHY production dedup uses the single-pass
 # smaller-id reduction instead of transitive merges: on a shared-vocabulary
@@ -757,7 +758,7 @@ def _minhash_candidates(documents):
         bands.withColumn("bucket_size", F.count("*").over(_W.partitionBy("band", "key")))
         .filter(F.col("bucket_size") <= _MAX_BUCKET)
         .select("doc_id", "band", "key")
-        .cache()
+        .transform(pin)
     )
     a, b = small.alias("a"), small.alias("b")
     return (
@@ -816,7 +817,9 @@ def _cc_labels_star(cand, iters_out: list | None = None):
     and the fixpoint is the min-rooted star forest: (node -> component
     minimum) for every non-root. Convergence is detected by set equality
     of consecutive (distinct) edge sets — equal counts plus an empty
-    one-sided difference.
+    one-sided difference. Each round's edge set is pinned with
+    ``truncate``; the superseded round is released once convergence is
+    tested, so only the final round stays pinned until ``release()``.
 
     Returns (node, lbl) with lbl = the component's minimum doc_id — the
     same fixpoint as min-label propagation (pinned against the
@@ -829,9 +832,7 @@ def _cc_labels_star(cand, iters_out: list | None = None):
     wu = _W.partitionBy("u")
     # cand is already DISTINCT (da < db), so the canonical u>v orientation
     # needs no re-dedup
-    E = cand.select(F.col("db").alias("u"), F.col("da").alias("v")).localCheckpoint(
-        eager=True
-    )
+    E = pin(cand.select(F.col("db").alias("u"), F.col("da").alias("v")), truncate=True)
     e_cnt = E.count()
     n_iter = 0
     for _ in range(_CC_MAX_ITERS):
@@ -851,10 +852,11 @@ def _cc_labels_star(cand, iters_out: list | None = None):
             .union(sm.select("u", F.col("m").alias("v")))
             .filter(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint(eager=True)  # truncate per-round lineage
+            .transform(pin, truncate=True)  # truncate per-round lineage
         )
         new_cnt = new_e.count()
         done = new_cnt == e_cnt and new_e.subtract(E).isEmpty()
+        release(E)  # superseded: the checkpointed new_e no longer reads it
         E, e_cnt = new_e, new_cnt
         if done:
             break
@@ -1087,7 +1089,7 @@ def _prefix_jaccard(documents):
         # one narrow row per document, referenced 5x (grp, the reps join,
         # both `within` sides, both `crossg` member expansions) — uncached,
         # every reader re-scanned documents and re-hashed the full text
-        .cache()
+        .transform(pin)
     )
     grp = fp.groupBy("fp").agg(F.min("doc_id").alias("rep"))
     reps = (
@@ -1100,7 +1102,7 @@ def _prefix_jaccard(documents):
         # one row per distinct text, referenced 3x (tokenization, sized_fp,
         # the crossg rep->group expansion) — cache so the fp⋈grp
         # representative join runs once
-        .cache()
+        .transform(pin)
     )
     arr = reps.select(
         "doc_id", F.split(F.col("t"), r"\s+").alias("a")
@@ -1121,7 +1123,7 @@ def _prefix_jaccard(documents):
         .distinct()
         # cached: dfreq / sized / ranked / both intersection sides all read
         # this frame — uncached, each re-ran the tokenize+distinct shuffle
-        .cache()
+        .transform(pin)
     )
     dfreq = toks.groupBy("h").agg(F.count("*").alias("df"))
     # per-rep sorted token array + size in ONE groupBy over the cached toks
@@ -1130,7 +1132,7 @@ def _prefix_jaccard(documents):
     tokarr = toks.groupBy("doc_id").agg(
         F.sort_array(F.collect_list("h")).alias("hs"),
         F.count("*").alias("s"),
-    ).cache()
+    ).transform(pin)
     sized = tokarr.select("doc_id", "s")
     ranked = toks.join(dfreq, "h").select(
         "doc_id",

@@ -34,6 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..session import pin
 from . import Tables, register
 
 _DAMP_NUM, _DAMP_DEN = 85, 100  # d = 0.85 as an exact rational
@@ -117,7 +118,7 @@ def graph_pagerank_nations(spark, sf_dir):
             F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst")
         )
         .agg(F.count("*").cast("bigint").alias("w"))
-        .cache()  # ≤ |nations|² rows, read by every iteration + degree sums
+        .transform(pin)  # ≤ |nations|² rows, read by every iteration + degree sums
     )
     outw = edges.groupBy("src").agg(F.sum("w").cast("bigint").alias("out_w"))
     inw = edges.groupBy("dst").agg(F.sum("w").cast("bigint").alias("in_w"))
@@ -290,7 +291,7 @@ def graph_reachability_recursive(spark, sf_dir):
         _reach_strong_sql(
             "__reach_lineitem", "__reach_orders", "__reach_customer", "__reach_supplier"
         )
-    ).cache()
+    ).transform(pin)
     strong.createOrReplaceTempView("__reach_strong")
     return spark.sql(_reach_rec_sql("__reach_strong"))
 
@@ -362,7 +363,7 @@ def graph_triangle_count(spark, sf_dir):
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
         )
         .distinct()
-        .cache()
+        .transform(pin)
     )
     deg = (
         und.select(F.col("a").alias("node"))

@@ -438,52 +438,12 @@ def text_inverted_index(spark, sf_dir):
 # customer_rfm_segments: recency/frequency/monetary quintile segmentation of
 # customers from their orders — the classic CRM cut the reference's dashboards
 # do in pandas. Quintiles are SQL ntile(5) semantics, computed WITHOUT a
-# global sort window by the same range-partition + per-partition offsets +
-# closed-form fill rule as win_ntile_deciles (advanced.py) — applied three
-# times, once per metric. All monetary math is exact integer cents.
+# global sort window by operators/ranked.global_ntile (ranged_prefix's
+# global rank + the closed-form fill rule), the same helper as
+# win_ntile_deciles (advanced.py) — applied three times, once per metric.
+# All monetary math is exact integer cents.
 # ---------------------------------------------------------------------------
 _RFM_CUTOFF = "1998-08-02"
-
-
-def _global_ntile(spark, df, n, order_cols, out_col):
-    """Exact SQL ntile(n) over ORDER BY order_cols with no global sort window:
-    repartitionByRange on the total order, local row_number, add collected
-    per-partition offsets (32 small ints — tiny by construction), then the
-    closed-form ntile fill rule. Bit-identical to ntile() at any scale."""
-    nparts = 32
-    ranged = (
-        df.repartitionByRange(nparts, *order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .cache()
-    )
-    counts = {
-        r["_pid"]: r["n"]
-        for r in ranged.groupBy("_pid").agg(F.count("*").alias("n")).collect()
-    }
-    total = sum(counts.values())
-    offsets, acc = [], 0
-    for pid in sorted(counts):
-        offsets.append((pid, acc))
-        acc += counts[pid]
-    off_df = spark.createDataFrame(offsets, "_pid int, _off long")
-    wloc = W.partitionBy("_pid").orderBy(*order_cols)
-    base_sz, rem = total // n, total % n
-    pivot = rem * (base_sz + 1)
-    if base_sz == 0:
-        tile_expr = "CAST(_r AS INT)"
-    else:
-        tile_expr = (
-            f"CAST(CASE WHEN _r <= {pivot} THEN (_r - 1) DIV {base_sz + 1} + 1 "
-            f"ELSE {rem} + (_r - 1 - {pivot}) DIV {base_sz} + 1 END AS INT)"
-        )
-    out = (
-        ranged.withColumn("_lr", F.row_number().over(wloc))
-        .join(F.broadcast(off_df), "_pid")
-        .withColumn("_r", F.col("_off") + F.col("_lr"))
-        .withColumn(out_col, F.expr(tile_expr))
-        .drop("_pid", "_lr", "_off", "_r")
-    )
-    return out
 
 
 @register(
@@ -512,6 +472,8 @@ def _global_ntile(spark, df, n, order_cols, out_col):
     """,
 )
 def customer_rfm_segments(spark, sf_dir):
+    from ..operators.ranked import global_ntile
+
     t = Tables(spark, sf_dir)
     per_cust = t.orders.groupBy("o_custkey").agg(
         F.datediff(F.lit(_RFM_CUTOFF).cast("date"), F.max("o_orderdate")).alias(
@@ -520,9 +482,9 @@ def customer_rfm_segments(spark, sf_dir):
         F.count("*").alias("n_orders"),
         F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).cast("long").alias("cents"),
     )
-    scored = _global_ntile(spark, per_cust, 5, ["recency_days", "o_custkey"], "r_score")
-    scored = _global_ntile(spark, scored, 5, ["n_orders", "o_custkey"], "f_score")
-    scored = _global_ntile(spark, scored, 5, ["cents", "o_custkey"], "m_score")
+    scored = global_ntile(spark, per_cust, 5, ["recency_days", "o_custkey"], "r_score")
+    scored = global_ntile(spark, scored, 5, ["n_orders", "o_custkey"], "f_score")
+    scored = global_ntile(spark, scored, 5, ["cents", "o_custkey"], "m_score")
     return (
         scored.groupBy("r_score", "f_score", "m_score")
         .agg(

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..session import pin
 from . import Tables, register
 from .sketches import _h_spark, _h_sql
 
@@ -508,7 +509,7 @@ def mix_apportion_budget(spark, sf_dir):
         "base_quota",
         "rem",
         F.when(F.col("rr") <= F.col("l"), 1).otherwise(0).cast("long").alias("extra"),
-    ).cache()
+    ).transform(pin)
     alloc_total = alloc.agg(
         F.sum(F.col("base_quota") + F.col("extra")).cast("long").alias("alloc_total")
     )

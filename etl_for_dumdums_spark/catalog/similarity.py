@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..session import pin
 from . import ROUND_DP as DP
 from . import Tables, register
 
@@ -252,7 +253,7 @@ def sim_lsh_bucketed(spark, sf_dir, max_bucket: int = _MAX_SIM_BUCKET):
     t = Tables(spark, sf_dir)
     # quantize+bucket the corpus ONCE: sizes and both self-join sides read
     # iv (3 consumers re-ran the embeddings scan + transform before; §5)
-    iv = _bucketed_ivecs(t).cache()
+    iv = pin(_bucketed_ivecs(t))
     small, _hot = _cap_buckets(iv, max_bucket)
     a = small.alias("a")
     b = small.alias("b")
@@ -498,7 +499,7 @@ _NEARDUP_COS = 0.55
 def dedup_embedding_neardup(spark, sf_dir, max_bucket: int = _MAX_SIM_BUCKET):
     t = Tables(spark, sf_dir)
     # quantize+bucket ONCE for sizes, hot and both pair-join sides (§5)
-    iv = _bucketed_ivecs(t).cache()
+    iv = pin(_bucketed_ivecs(t))
     small, hot = _cap_buckets(iv, max_bucket)
     a, b = small.alias("a"), small.alias("b")
     pairs = a.join(
@@ -692,7 +693,7 @@ def sim_contrastive_triplets(spark, sf_dir, max_bucket: int = _MAX_SIM_BUCKET):
         F.expr(_IVEC_SPARK).alias("v"),
         F.expr(_NORM_SPARK.format(v=_IVEC_SPARK)).alias("nrm"),
         F.expr(_bucket_spark(_IVEC_SPARK)).alias("bucket"),
-    ).cache()  # sizes + both candidate-join sides read iv (§5)
+    ).transform(pin)  # sizes + both candidate-join sides read iv (§5)
     small, _hot = _cap_buckets(iv, max_bucket)
     a = small.alias("a")
     b = small.alias("b")
@@ -1204,7 +1205,7 @@ def embed_kmeans_lloyd(spark, sf_dir):
 
     # a0 feeds the update, the reassignment, and the reports; a1 feeds two
     # rollups — cache both or the K-way assignment cross join reruns per use
-    a0 = assign(iv, c0, "").withColumnRenamed("_assigned", "cid0").cache()
+    a0 = pin(assign(iv, c0, "").withColumnRenamed("_assigned", "cid0"))
     comps = a0.select(
         F.col("cid0").alias("cid"), F.posexplode("v").alias("pos", "x")
     ).select("cid", (F.col("pos") + 1).alias("i"), "x")
@@ -1217,7 +1218,7 @@ def embed_kmeans_lloyd(spark, sf_dir):
         ).alias("cv")
     )
     c1n = c1v.select("cid", "cv", F.expr(_NORM_SPARK.format(v="cv")).alias("cnrm"))
-    a1 = assign(a0, c1n, "cid0").withColumnRenamed("_assigned", "cid1").cache()
+    a1 = pin(assign(a0, c1n, "cid0").withColumnRenamed("_assigned", "cid1"))
     per0 = a1.groupBy(F.col("cid0").alias("cid")).agg(
         F.count("*").cast("long").alias("n_init"),
         F.count_if(F.col("cid1") != F.col("cid0")).cast("long").alias("n_moved_away"),
@@ -1338,7 +1339,7 @@ def embed_kmeans_lloyd(spark, sf_dir):
 )
 def sim_lsh_multiprobe(spark, sf_dir):
     t = Tables(spark, sf_dir)
-    iv = _bucketed_ivecs(t).cache()
+    iv = pin(_bucketed_ivecs(t))
     q = iv.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
@@ -1373,7 +1374,7 @@ def sim_lsh_multiprobe(spark, sf_dir):
                 DP,
             ).alias("cosine"),
         )
-        .cache()
+        .transform(pin)
     )
     w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
     top9 = (
@@ -1505,7 +1506,7 @@ def sim_ivf_trained_topk(spark, sf_dir):
     # uncached, every run re-ran the MLlib vector-conversion + centroid
     # assignment pass over the full corpus (r9 opt: 8.6s -> see
     # OPTIMIZATION_r09.md)
-    assigned = assigned.cache()
+    assigned = pin(assigned)
     qids = list(range(_IVF_TRAIN_QUERIES))
 
     def run(nprobe):
@@ -1518,7 +1519,7 @@ def sim_ivf_trained_topk(spark, sf_dir):
     # Cached: collected once for the truth set here and consumed again by
     # the caller's terminal action — uncached, the whole probe pipeline
     # re-ran at that action.
-    full = run(_IVF_TRAIN_K).cache()
+    full = pin(run(_IVF_TRAIN_K))
     truth = {
         (r["query_id"], r["neighbor_id"]) for r in full.collect()
     }

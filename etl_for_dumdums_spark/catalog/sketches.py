@@ -32,6 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..session import pin
 from . import ROUND_DP as DP
 from . import Tables, register
 
@@ -411,7 +412,7 @@ def sketch_histogram_quantile(spark, sf_dir):
             F.expr("CAST(round(l_extendedprice * 100) AS BIGINT)").alias("c")
         )
         .agg(F.count("*").alias("f"))
-        .cache()  # |distinct cents| rows — read by bounds, bins and exact
+        .transform(pin)  # |distinct cents| rows — read by bounds, bins and exact
     )
     b = hist.agg(
         F.min("c").alias("mn"), F.max("c").alias("mx"), F.sum("f").alias("n")

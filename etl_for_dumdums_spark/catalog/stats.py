@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..session import pin
 from . import ROUND_DP as DP
 from . import Tables, register
 
@@ -423,7 +424,7 @@ def stats_chisq_cramers(spark, sf_dir):
         .filter(F.col("band").isNotNull())
         .groupBy("event_type", "band")
         .agg(F.count("*").alias("o"))
-        .cache()  # ≤ types×bands rows, read by tot, chi AND the final select —
+        .transform(pin)  # ≤ types×bands rows, read by tot, chi AND the final select —
         # without this every branch re-scans + re-parses the events JSON
         # (measured 213 s → 5 s at the 100× dataset)
     )

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..session import pin
 from . import ROUND_DP as DP
 from . import Tables, register
 
@@ -576,7 +577,7 @@ def _winnow_sketch(docs):
         winnowed.filter(F.col("full_i").isNotNull())
         .select("doc_id", "lang", F.col("sel").alias("h"))
         .distinct()
-        .cache()
+        .transform(pin)
     )
     # r9 opt: the five per-lang stats from TWO aggregation passes over the
     # cached sketch instead of three (sizes->per_lang, count_distinct(h),
@@ -715,7 +716,7 @@ def _winnow_neardup(docs):
         # cached: sketch sizes, bucket sizing, and both self-join sides all
         # read this frame — without the cache each re-runs the per-position
         # hash pipeline
-        .cache()
+        .transform(pin)
     )
     sizes = sketch.groupBy("doc_id").agg(F.count("*").alias("sk"))
     # bucket sizes via a window count on h (the self-join key, so the
@@ -817,7 +818,7 @@ def text_repetition_gopher(spark, sf_dir):
         F.split(
             F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " "), " "
         ).alias("arr"),
-    ).cache()
+    ).transform(pin)
     words = arrs.filter(F.size("arr") >= 1).select(
         "doc_id",
         "lang",

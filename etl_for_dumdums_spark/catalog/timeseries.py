@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..session import pin
 from . import ROUND_DP as DP
 from . import Tables, register
 
@@ -607,7 +608,7 @@ def ts_changepoint_cusum(spark, sf_dir):
         F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
         .cast("long")
         .alias("cents")
-    ).cache()  # ~|calendar| rows; read by the totals pass and the CUSUM pass
+    ).transform(pin)  # ~|calendar| rows; read by the totals pass and the CUSUM pass
     tot = daily.agg(
         F.count("*").cast("long").alias("n"), F.sum("cents").cast("long").alias("t")
     )

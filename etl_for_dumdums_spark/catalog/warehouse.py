@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..session import pin
 from . import Tables, register
 
 # ---------------------------------------------------------------------------
@@ -483,7 +484,7 @@ def agg_hierarchy_shares(spark, sf_dir):
             .cast("long")
             .alias("cents")
         )
-        .cache()
+        .transform(pin)
     )
     parent = child.groupBy("region").agg(
         F.sum("cents").cast("long").alias("region_cents")

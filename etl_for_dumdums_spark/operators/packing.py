@@ -3,10 +3,10 @@ pipeline: assign documents to contiguous shards of ~``shard_tokens``
 tokens each (the sequence-packing / shard-manifest step before writing
 training data), deterministically and without a global sort window.
 
-Same scale shape as the distributed exact NTILE: ``repartitionByRange`` on
-the deterministic order key, per-partition running token sums, collected
-per-partition totals (one small int per partition) broadcast back as
-offsets → global cumulative sum → shard id by end position. A naive
+Same scale shape as the distributed exact NTILE: the global cumulative
+token sum comes from ``operators/ranked.ranged_prefix`` (range partitions,
+per-partition running sums, collected per-partition offsets), and the
+shard id follows from each document's end position. A naive
 ``sum() OVER (ORDER BY ...)`` funnels the corpus through one task; this
 keeps the cumsum fully parallel and bit-identical to the serial result.
 """
@@ -14,8 +14,9 @@ keeps the cumsum fully parallel and bit-identical to the serial result.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+
+from .ranked import ranged_prefix
 
 
 def assign_token_shards(
@@ -24,44 +25,15 @@ def assign_token_shards(
     token_col: str,
     shard_tokens: int,
     n_parts: int = 32,
-    pins: list | None = None,
 ) -> DataFrame:
     """Add a ``shard_id`` column: contiguous-by-id greedy packing where a
     doc belongs to the shard its cumulative END position falls in
     (shard s covers cumulative tokens (s*B, (s+1)*B]). Deterministic for
     any partitioning; equals the single-pass serial cumsum rule exactly.
-
-    Pinned-frame contract (same as operators/ranked.py): the intermediate
-    range-partitioned frame stays cached until the caller's terminal
-    action, because the broadcast offsets came from one evaluation of the
-    sampled range bounds. Pass ``pins`` (a list) to receive the pinned
-    DataFrame for ``.unpersist()`` after the dependent action, or
-    ``spark.catalog.clearCache()`` between queries.
-    """
-    ranged = (
-        df.repartitionByRange(n_parts, id_col)
-        .withColumn("_pid", F.spark_partition_id())
-        .cache()
-    )
-    if pins is not None:
-        pins.append(ranged)
-    part_sums = {
-        r["_pid"]: r["s"]
-        for r in ranged.groupBy("_pid").agg(F.sum(token_col).alias("s")).collect()
-    }
-    offsets, acc = [], 0
-    for pid in sorted(part_sums):
-        offsets.append((pid, acc))
-        acc += part_sums[pid]
-    off_df = df.sparkSession.createDataFrame(offsets, "_pid int, _off long")
-    wcum = W.partitionBy("_pid").orderBy(id_col).rowsBetween(W.unboundedPreceding, 0)
-    return (
-        ranged.withColumn("_cum_local", F.sum(token_col).over(wcum))
-        .join(F.broadcast(off_df), "_pid")
-        .withColumn(
-            "shard_id",
-            ((F.col("_off") + F.col("_cum_local") - 1) / shard_tokens)
-            .cast("long"),
-        )
-        .drop("_pid", "_off", "_cum_local")
-    )
+    ``id_col`` must be unique (it is the total order), and the result
+    follows ``ranged_prefix``'s pinned-frame rule."""
+    cum = f"cum_{token_col}"
+    out, _ = ranged_prefix(df.sparkSession, df, [id_col], [token_col], n_parts)
+    return out.withColumn(
+        "shard_id", ((F.col(cum) - 1) / shard_tokens).cast("long")
+    ).drop("_r", cum)

@@ -2,8 +2,9 @@
 
 A ``row_number() OVER (ORDER BY ...)`` (or a running ``SUM``) with no
 PARTITION BY funnels the entire table through ONE task — the
-single-partition-window scale killer. This module generalizes the trick
-win_ntile_deciles / customer_rfm_segments / pack_token_shards already use:
+single-partition-window scale killer. This module is the one copy of the
+range-partition + collected-offset algorithm; win_ntile_deciles,
+customer_rfm_segments and pack_token_shards all run on it:
 
   1. ``repartitionByRange`` on the total order (Spark samples range bounds,
      so partitions are balanced);
@@ -19,8 +20,9 @@ order (``order_cols`` must break all ties) or per-partition row numbering is
 nondeterministic.
 
 Consumers: stats_ks_mannwhitney (cumulative sample counts),
-agg_gini_concentration (rank-weighted revenue sums), and any future exact
-order-statistic operator.
+agg_gini_concentration (rank-weighted revenue sums), the exact NTILE
+(``global_ntile``), token-shard packing (operators/packing.py), and any
+future exact order-statistic operator.
 """
 
 from __future__ import annotations
@@ -29,6 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..session import pin
+
 
 def ranged_prefix(
     spark: SparkSession,
@@ -36,7 +40,6 @@ def ranged_prefix(
     order_cols: list[str],
     sum_cols: list[str],
     nparts: int = 32,
-    pins: list | None = None,
 ) -> tuple[DataFrame, dict[str, int]]:
     """Attach a global 1-based rank ``_r`` and, for each ``c`` in
     ``sum_cols``, an inclusive prefix sum ``cum_<c>`` over the total order
@@ -46,25 +49,19 @@ def ranged_prefix(
 
     ``sum_cols`` must be integer-typed; prefix sums are exact BIGINT.
 
-    Pinned-frame contract: the intermediate range-partitioned frame is
-    cached (consumed twice: the offset collect here, and the downstream
-    plan) and MUST stay pinned until the caller's terminal action — the
-    offsets were collected from ONE evaluation of the (sampled, therefore
-    nondeterministic) range partitioning, and an uncached re-evaluation
-    could re-draw the bounds and misalign the offsets. Release it after
-    the dependent action via either
-      * ``pins``: pass a list and the pinned DataFrame is appended for the
-        caller to ``.unpersist()`` when done (the library-caller path), or
-      * ``spark.catalog.clearCache()`` between queries (what bench.py and
-        tools/check_oracle.py do).
+    Pinned-frame rule: the intermediate range-partitioned frame is pinned
+    (``session.pin``; consumed twice: the offset collect here, and the
+    downstream plan) and MUST stay pinned until the caller's terminal
+    action — the offsets were collected from ONE evaluation of the
+    (sampled, therefore nondeterministic) range partitioning, and an
+    uncached re-evaluation could re-draw the bounds and misalign the
+    offsets. Call ``session.release()`` after that action.
     """
     ranged = (
         df.repartitionByRange(nparts, *order_cols)
         .withColumn("_pid", F.spark_partition_id())
-        .cache()
+        .transform(pin)
     )
-    if pins is not None:
-        pins.append(ranged)
     aggs = [F.count("*").alias("_n")] + [
         F.sum(c).cast("long").alias(f"_s_{c}") for c in sum_cols
     ]
@@ -91,3 +88,24 @@ def ranged_prefix(
     drop = ["_pid", "_off"] + [f"_off_{c}" for c in sum_cols]
     totals: dict[str, int] = {"_n": acc_n, **{c: int(acc[c]) for c in sum_cols}}
     return out.drop(*drop), totals
+
+
+def global_ntile(
+    spark: SparkSession, df: DataFrame, n: int, order_cols: list[str], out_col: str
+) -> DataFrame:
+    """Exact SQL ``ntile(n) OVER (ORDER BY order_cols)`` as ``out_col``, with
+    no global sort window: the global rank from ``ranged_prefix``, then
+    ntile's floor-division fill rule in closed form (the first
+    ``total % n`` tiles hold one extra row). Bit-identical to ntile() at
+    any scale; ``order_cols`` must be a total order."""
+    ranked, totals = ranged_prefix(spark, df, order_cols, [])
+    base_sz, rem = divmod(totals["_n"], n)
+    pivot = rem * (base_sz + 1)
+    if base_sz == 0:
+        tile_expr = "CAST(_r AS INT)"
+    else:
+        tile_expr = (
+            f"CAST(CASE WHEN _r <= {pivot} THEN (_r - 1) DIV {base_sz + 1} + 1 "
+            f"ELSE {rem} + (_r - 1 - {pivot}) DIV {base_sz} + 1 END AS INT)"
+        )
+    return ranked.withColumn(out_col, F.expr(tile_expr)).drop("_r")

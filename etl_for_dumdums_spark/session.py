@@ -4,13 +4,20 @@ Tuned for the test environment (local[N], single JVM) while keeping every
 setting cluster-safe: AQE handles runtime re-planning (join strategy, skew,
 partition coalescing) at any scale; UTC session timezone pins timestamp
 semantics for oracle comparison; Arrow is enabled for the pandas boundary.
+
+Also the one lifecycle for persisted intermediates: every frame a query
+persists goes through ``pin`` and is freed by ``release`` after the
+caller's terminal action.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+# frames persisted by pin() and not yet released, with their truncate flag
+_PINNED: list[tuple[DataFrame, bool]] = []
 
 
 def get_spark(app_name: str = "etl_for_dumdums_spark") -> SparkSession:
@@ -47,3 +54,36 @@ def get_spark(app_name: str = "etl_for_dumdums_spark") -> SparkSession:
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def pin(df: DataFrame, truncate: bool = False) -> DataFrame:
+    """Persist ``df`` for reuse and record it until ``release()``.
+
+    ``pin(df)`` is exactly ``df.cache()``. ``pin(df, truncate=True)`` is
+    ``df.localCheckpoint(eager=True)``: materialized now, lineage cut (the
+    per-round form of iterative algorithms). Either way the frame stays
+    persisted until ``release()``, which callers run after their terminal
+    action: a frame whose driver-side results (collected offsets, a
+    convergence test) shaped the downstream plan must not be recomputed
+    before that action runs."""
+    df = df.localCheckpoint(eager=True) if truncate else df.cache()
+    _PINNED.append((df, truncate))
+    return df
+
+
+def release(*frames: DataFrame) -> None:
+    """Free the named pinned frames, or every pinned frame when none are
+    named, blocking until their blocks are gone, and forget them.
+
+    ``DataFrame.unpersist()`` and ``catalog.clearCache()`` cannot free a
+    localCheckpoint: its blocks belong to the RDD behind the frame's
+    ``LogicalRDD``, so a truncated frame unpersists that RDD instead."""
+    keep = []
+    for df, truncate in _PINNED:
+        if frames and not any(df is f for f in frames):
+            keep.append((df, truncate))
+        elif truncate:
+            df._jdf.queryExecution().analyzed().rdd().unpersist(True)
+        else:
+            df.unpersist(blocking=True)
+    _PINNED[:] = keep

@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import pin
+
 _MODES = {"PERMISSIVE", "DROPMALFORMED", "FAILFAST"}
 
 CORRUPT_COL = "_corrupt_record"
@@ -97,7 +99,7 @@ def write_orc(df: DataFrame, path: str, mode: str = "overwrite", *partition_cols
     w.orc(path)
 
 
-def quarantine_split(df: DataFrame, pins: list | None = None) -> tuple[DataFrame, DataFrame]:
+def quarantine_split(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Split a PERMISSIVE read into (clean, quarantined) frames: a row is
     quarantined iff the corrupt column captured its raw text. The clean
     frame drops the quarantine column, ready for the warehouse write; the
@@ -110,14 +112,11 @@ def quarantine_split(df: DataFrame, pins: list | None = None) -> tuple[DataFrame
     re-read the parse anyway. The cache also FREEZES full-schema
     malformedness: Spark checks a row's token count only on the unpruned
     parse, so without the cache the quarantine counts could shift under
-    downstream column pruning (pinned in tests/test_file_sources.py). Same pinned-frame contract as
-    operators/ranked.py: pass ``pins`` to receive the cached frame for
-    ``.unpersist()`` after the terminal action, or clear the cache
-    between queries."""
+    downstream column pruning (pinned in tests/test_file_sources.py). The
+    cache is a ``session.pin``: call ``session.release()`` after the
+    terminal action."""
     if CORRUPT_COL not in df.columns:
         raise ValueError("quarantine_split needs a PERMISSIVE read (corrupt column absent)")
-    df = df.cache()
-    if pins is not None:
-        pins.append(df)
+    df = pin(df)
     bad = F.col(CORRUPT_COL).isNotNull()
     return df.filter(~bad).drop(CORRUPT_COL), df.filter(bad)

@@ -22,6 +22,16 @@ def spark():
     yield spark
 
 
+@pytest.fixture(autouse=True)
+def _release_pins():
+    """Every test releases what it pinned: intermediates persisted with
+    session.pin live until the test's terminal action, then go."""
+    yield
+    from etl_for_dumdums_spark.session import release
+
+    release()
+
+
 @pytest.fixture()
 def tmp_store(tmp_path):
     return str(tmp_path / "store")

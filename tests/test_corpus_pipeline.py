@@ -139,12 +139,13 @@ def test_chunk_and_pack_corpus_stage(spark):
 
     from etl_for_dumdums_spark.catalog import Tables
     from etl_for_dumdums_spark.operators.corpus import chunk_and_pack_corpus, clean_corpus
+    from etl_for_dumdums_spark.session import pin
 
     from .conftest import SF_SMOKE as _SF
 
     docs = Tables(spark, _SF).documents
     cleaned = clean_corpus(docs)
-    packed = chunk_and_pack_corpus(cleaned, shard_tokens=500).cache()
+    packed = pin(chunk_and_pack_corpus(cleaned, shard_tokens=500))
     rows = packed.orderBy("chunk_key").collect()
     # every cleaned doc survives into >= 1 chunk
     assert packed.select("doc_id").distinct().count() == cleaned.count()

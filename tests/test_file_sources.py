@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from etl_for_dumdums_spark.session import release
 from etl_for_dumdums_spark.sources.files import (
     CORRUPT_COL,
     quarantine_split,
@@ -146,12 +147,10 @@ def test_csv_column_pruning_changes_malformedness_and_split_pins_it(spark, tmp_p
     assert bad_count("id") == 0  # pruned: clean
     assert bad_count("score") == 0  # even the MISSING column alone: clean
     # quarantine_split caches the full frame: stable counts either way
-    pins = []
-    clean, bad = quarantine_split(read_csv(spark, str(p), SCHEMA), pins)
+    clean, bad = quarantine_split(read_csv(spark, str(p), SCHEMA))
     assert bad.count() == 1 and clean.count() == 2
     assert bad.select("id").collect()[0]["id"] == 2
-    for f in pins:
-        f.unpersist()
+    release()
 
 
 def test_file_ingest_quarantine_fixture_is_idempotent(tmp_path):

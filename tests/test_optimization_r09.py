@@ -24,6 +24,7 @@ from etl_for_dumdums_spark.catalog import QUERIES  # noqa: E402
 from etl_for_dumdums_spark.catalog.aggregations import (  # noqa: E402
     _orderstat_percentiles,
 )
+from etl_for_dumdums_spark.session import release  # noqa: E402
 
 
 @pytest.fixture(scope="module")
@@ -332,7 +333,7 @@ def test_ngram_jaccard_fingerprint_matches_string_form(spark, sf):
     t = Tables(spark, d)
     old = [r.asDict() for r in _ngram_jaccard_string_form(t.documents).collect()]
     new = [r.asDict() for r in QUERIES["dedup_ngram_jaccard"](spark, d).collect()]
-    spark.catalog.clearCache()
+    release()
     assert old == new
 
 
@@ -428,7 +429,7 @@ def test_cusum_one_pass_matches_three_pass(spark, sf):
 
     old = _cusum_three_pass_form(spark, daily).collect()[0]
     new = EXTRA_QUERIES["ts_changepoint_cusum"](spark, d).collect()[0]
-    spark.catalog.clearCache()
+    release()
     assert old.asDict() == new.asDict()
 
 
@@ -531,11 +532,11 @@ def test_ks_mannwhitney_one_pass_matches_two_pass(spark, sf):
         .agg(F.min("cents").cast("long").alias("atc"))
         .collect()[0]["atc"]
     )
-    spark.catalog.clearCache()
+    release()
     from etl_for_dumdums_spark.catalog import EXTRA_QUERIES
 
     new = EXTRA_QUERIES["stats_ks_mannwhitney"](spark, d).collect()[0]
-    spark.catalog.clearCache()
+    release()
     assert float(new["ks_at_price"]) == round(old_at / 100.0, 2)
 
 
@@ -685,7 +686,7 @@ def test_histogram_quantile_single_scan_matches_multiscan(spark, sf):
     t = Tables(spark, d)
     old = [r.asDict() for r in _histogram_quantile_multiscan_form(spark, t.lineitem).collect()]
     new = [r.asDict() for r in EXTRA_QUERIES["sketch_histogram_quantile"](spark, d).collect()]
-    spark.catalog.clearCache()
+    release()
     assert old == new
 
 

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_for_dumdums_spark.catalog.dedup import _CC_MAX_ITERS
+from etl_for_dumdums_spark.session import pin, release
 
 from .conftest import SF_SMOKE
 
@@ -82,14 +83,14 @@ def _cc_labels_minlabel(cand):
     every node labelled with its component's minimum doc_id). Converges in
     O(graph diameter) full-edge-join rounds, which is exactly why the
     query itself now uses the star contraction instead (r10 opt)."""
-    cand = cand.cache()
+    cand = pin(cand)
     nodes = cand.select(F.col("da").alias("node")).union(cand.select("db")).distinct()
     edges = cand.select(F.col("da").alias("src"), F.col("db").alias("dst"))
-    edges = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).cache()
+    edges = pin(
+        edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    )
 
-    labels = nodes.withColumn("lbl", F.col("node")).localCheckpoint(eager=True)
+    labels = pin(nodes.withColumn("lbl", F.col("node")), truncate=True)
     # convergence via the label-sum invariant: labels are per-node monotone
     # nonincreasing, so sum(lbl) strictly decreases iff ANY label changed
     prev_sum = labels.agg(F.sum("lbl")).collect()[0][0]
@@ -102,7 +103,7 @@ def _cc_labels_minlabel(cand):
             .union(prop)
             .groupBy("node")
             .agg(F.min("lbl").alias("lbl"))
-            .localCheckpoint(eager=True)  # truncate per-iteration lineage
+            .transform(pin, truncate=True)  # truncate per-iteration lineage
         )
         new_sum = new_labels.agg(F.sum("lbl")).collect()[0][0]
         labels = new_labels
@@ -136,7 +137,7 @@ def test_cc_star_matches_minlabel_on_real_candidates(spark):
     )
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    cand = _minhash_candidates(docs).cache()
+    cand = pin(_minhash_candidates(docs))
     assert _labels(_cc_labels_star(cand)) == _labels(_cc_labels_minlabel(cand))
 
 
@@ -153,6 +154,24 @@ def test_cc_star_logarithmic_rounds_on_long_chain(spark):
     lbls = _labels(_cc_labels_star(cand, iters))
     assert lbls == [(i, 0) for i in range(256)]  # one component rooted at 0
     assert iters[0] <= math.ceil(math.log2(255)) + 1, iters
+
+
+def test_cc_star_keeps_only_the_final_round_pinned(spark):
+    """Each contraction round is a truncating pin; superseded rounds are
+    released in the loop, so after the result is collected exactly one
+    checkpointed RDD (the final edge set) remains, and release() frees it."""
+    from etl_for_dumdums_spark.catalog.dedup import _cc_labels_star
+
+    release()
+    jsc = spark.sparkContext._jsc.sc()
+    assert not jsc.getRDDStorageInfo()
+    cand = _pairs(spark, [(i, i + 1) for i in range(63)])  # 64-node chain
+    iters: list[int] = []
+    assert _labels(_cc_labels_star(cand, iters)) == [(i, 0) for i in range(64)]
+    assert iters[0] > 1  # non-vacuous: several rounds were superseded
+    assert len(jsc.getRDDStorageInfo()) == 1
+    release()
+    assert not jsc.getRDDStorageInfo()
 
 
 # ---------------------------------------------------------------------------
@@ -195,7 +214,7 @@ def _ppj_frames(spark, docs):
             F.expr("CAST(conv(substr(md5(w), 1, 15), 16, 10) AS BIGINT)").alias("h"),
         )
         .distinct()
-        .cache()
+        .transform(pin)
     )
     dfreq = toks.groupBy("h").agg(F.count("*").alias("df"))
     sized = toks.groupBy("doc_id").agg(F.count("*").alias("s"))
@@ -207,7 +226,7 @@ def _ppj_frames(spark, docs):
         ranked.join(sized, "doc_id")
         .filter(F.col("rk") <= F.col("s") - F.floor((4 * F.col("s") + 4) / 5) + 1)
         .select("doc_id", "h", "rk", "s")
-        .cache()
+        .transform(pin)
     )
     return toks, sized, prefix
 

@@ -5,7 +5,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from etl_for_dumdums_spark import session
 from etl_for_dumdums_spark.operators.packing import assign_token_shards
+from etl_for_dumdums_spark.session import release
 
 from .conftest import SF_SMOKE
 
@@ -56,25 +58,23 @@ def test_packing_invariants(spark):
 
 
 def test_pins_registry_releases_intermediate_cache(spark):
-    """Library-caller path for the pinned-frame contract (r4 advice #7/
-    verdict item #7): the pins list receives the cached intermediate, and
-    unpersisting it after the terminal action leaves no storage behind."""
-    from etl_for_dumdums_spark.operators.packing import assign_token_shards
+    """Library-caller path for the pinned-frame rule (r4 advice #7/
+    verdict item #7): both operators pin their range-partitioned
+    intermediate, and release() after the terminal action leaves no
+    storage behind."""
     from etl_for_dumdums_spark.operators.ranked import ranged_prefix
 
-    spark.catalog.clearCache()  # drop pins left by earlier (contract-
-    # documented) tests so the storage assertions below see only ours
+    release()  # drop pins left by earlier tests so the storage
+    # assertions below see only ours
     df = spark.range(1, 501).select(
         F.col("id").alias("doc_id"), (F.col("id") % 97 + 1).alias("n_tok")
     )
-    pins = []
-    packed = assign_token_shards(df, "doc_id", "n_tok", 1000, pins=pins)
+    packed = assign_token_shards(df, "doc_id", "n_tok", 1000)
     assert packed.count() == 500  # terminal action
-    pref, totals = ranged_prefix(spark, df, ["doc_id"], ["n_tok"], pins=pins)
+    pref, totals = ranged_prefix(spark, df, ["doc_id"], ["n_tok"])
     assert pref.count() == 500 and totals["_n"] == 500
-    assert len(pins) == 2
+    assert len(session._PINNED) == 2  # one pin per operator
     jsc = spark.sparkContext._jsc.sc()
     assert jsc.getRDDStorageInfo(), "expected live cached storage before release"
-    for p in pins:
-        p.unpersist(blocking=True)
+    release()
     assert not jsc.getRDDStorageInfo(), "pins released but storage remains"

@@ -26,7 +26,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from bench import HEADLINE  # noqa: E402
 from etl_for_dumdums_spark.catalog import EXTRA_QUERIES, QUERIES, load_all  # noqa: E402
-from etl_for_dumdums_spark.session import get_spark  # noqa: E402
+from etl_for_dumdums_spark.session import get_spark, release  # noqa: E402
 
 
 def main() -> None:
@@ -51,7 +51,7 @@ def main() -> None:
 
     # warm the JVM + parquet footers once (mirrors bench.py)
     all_q[names[0]](spark, args.sf).count()
-    spark.catalog.clearCache()
+    release()
 
     times: dict[str, float] = {}
     spreads: dict[str, float] = {}
@@ -75,7 +75,7 @@ def main() -> None:
         except Exception as exc:
             print(f"FAIL {name}: {exc}", file=sys.stderr)
             times[name] = -1.0
-        spark.catalog.clearCache()
+        release()
         print(f"{name}: {times[name]}", file=sys.stderr)
 
     payload = {

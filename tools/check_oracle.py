@@ -34,7 +34,7 @@ from etl_for_dumdums_spark.catalog import (  # noqa: E402
     TABLE_NAMES,
     load_all,
 )
-from etl_for_dumdums_spark.session import get_spark  # noqa: E402
+from etl_for_dumdums_spark.session import get_spark, release  # noqa: E402
 
 
 def norm_cell(v):
@@ -250,84 +250,91 @@ def main():
     con = make_con()
 
     n_pass = n_fail = n_skip = 0
+    stopped = False
     for name in names:
-        fn = queries[name]
-        t0 = time.time()
         try:
-            sdf = fn(spark, args.sf)
-            scols = sdf.columns
-            sschema = sdf.schema  # capture pre-collect: usable after spark.stop()
-            srows = [tuple(r) for r in sdf.collect()]
-        except Exception as e:
-            print(f"FAIL {name}: spark error: {type(e).__name__}: {str(e)[:300]}")
-            n_fail += 1
-            continue
-        if name not in oracle:
-            print(f"SKIP {name}: no oracle (rows-only: {len(srows)} rows) [{time.time()-t0:.1f}s]")
-            n_skip += 1
-            continue
-        if os.environ.get("SPARK_GRAFT_STOP_SPARK_BEFORE_ORACLE"):
-            # single-query-per-process mode for the biggest oracles: stop
-            # Spark so its shuffle/blockmgr disk (tens of GB for the 900M-
-            # group queries) is freed before DuckDB starts spilling — at
-            # the 1000x replica join_cooccurrence_pairs needs ~46GB of
-            # oracle spill and the two could not fit the disk together.
-            # Only sane with one query per process: later queries would
-            # find the session dead.
-            spark.stop()
-        try:
+            fn = queries[name]
+            t0 = time.time()
             try:
-                atab = con.execute(oracle[name]).arrow()
-            except duckdb.OutOfMemoryException:
-                # long sweeps accumulate buffer-pool state on the connection
-                # (~180 scale-up oracles in, even 16KB allocations start
-                # failing under the memory_limit) — rebuild and retry once
-                # before declaring a failure
+                sdf = fn(spark, args.sf)
+                scols = sdf.columns
+                sschema = sdf.schema  # capture pre-collect: usable after spark.stop()
+                srows = [tuple(r) for r in sdf.collect()]
+            except Exception as e:
+                print(f"FAIL {name}: spark error: {type(e).__name__}: {str(e)[:300]}")
+                n_fail += 1
+                continue
+            if name not in oracle:
+                print(f"SKIP {name}: no oracle (rows-only: {len(srows)} rows) [{time.time()-t0:.1f}s]")
+                n_skip += 1
+                continue
+            if os.environ.get("SPARK_GRAFT_STOP_SPARK_BEFORE_ORACLE"):
+                # single-query-per-process mode for the biggest oracles: stop
+                # Spark so its shuffle/blockmgr disk (tens of GB for the 900M-
+                # group queries) is freed before DuckDB starts spilling — at
+                # the 1000x replica join_cooccurrence_pairs needs ~46GB of
+                # oracle spill and the two could not fit the disk together.
+                # Only sane with one query per process: later queries would
+                # find the session dead.
+                spark.stop()
+                stopped = True
+            try:
+                try:
+                    atab = con.execute(oracle[name]).arrow()
+                except duckdb.OutOfMemoryException:
+                    # long sweeps accumulate buffer-pool state on the connection
+                    # (~180 scale-up oracles in, even 16KB allocations start
+                    # failing under the memory_limit) — rebuild and retry once
+                    # before declaring a failure
+                    con = fresh_con(con)
+                    atab = con.execute(oracle[name]).arrow()
+                dcols = atab.column_names
+                drows = [tuple(d[c] for c in dcols) for d in atab.to_pylist()]
+            except Exception as e:
+                print(f"FAIL {name}: duckdb error: {type(e).__name__}: {str(e)[:300]}")
+                n_fail += 1
+                # a fatal error (OOM) invalidates the whole DuckDB database, not
+                # just the statement — rebuild (with backoff) so later queries
+                # aren't poisoned and a rebuild-time OOM can't abort the sweep
                 con = fresh_con(con)
-                atab = con.execute(oracle[name]).arrow()
-            dcols = atab.column_names
-            drows = [tuple(d[c] for c in dcols) for d in atab.to_pylist()]
-        except Exception as e:
-            print(f"FAIL {name}: duckdb error: {type(e).__name__}: {str(e)[:300]}")
-            n_fail += 1
-            # a fatal error (OOM) invalidates the whole DuckDB database, not
-            # just the statement — rebuild (with backoff) so later queries
-            # aren't poisoned and a rebuild-time OOM can't abort the sweep
-            con = fresh_con(con)
-            continue
+                continue
 
-        ok = True
-        msgs = []
-        if sorted(scols) != sorted(dcols):
-            ok = False
-            msgs.append(f"schema: spark={sorted(scols)} duckdb={sorted(dcols)}")
-        else:
-            tmis = type_mismatches(sschema, atab.schema)
-            if tmis:
+            ok = True
+            msgs = []
+            if sorted(scols) != sorted(dcols):
                 ok = False
-                msgs.append("type-strict: " + "; ".join(tmis))
-        if len(srows) != len(drows):
-            ok = False
-            msgs.append(f"rowcount: spark={len(srows)} duckdb={len(drows)}")
-        if ok:
-            _, sn = normalize(scols, srows)
-            _, dn = normalize(dcols, drows)
-            if sn != dn:
+                msgs.append(f"schema: spark={sorted(scols)} duckdb={sorted(dcols)}")
+            else:
+                tmis = type_mismatches(sschema, atab.schema)
+                if tmis:
+                    ok = False
+                    msgs.append("type-strict: " + "; ".join(tmis))
+            if len(srows) != len(drows):
                 ok = False
-                diffs = [(a, b) for a, b in zip(sn, dn) if a != b][:3]
-                msgs.append(f"values differ; first diffs (spark vs duckdb): {diffs}")
-        if ok:
-            print(f"PASS {name} ({len(srows)} rows) [{time.time()-t0:.1f}s]")
-            n_pass += 1
-        else:
-            print(f"FAIL {name}: " + " | ".join(msgs))
-            n_fail += 1
-        # drop caches the query pinned (ranged_prefix's range-partitioned
-        # frame, LSH candidate sets, …): a full-catalog sweep would
-        # otherwise accumulate dozens of cached RDDs and lean on LRU
-        # eviction under memory pressure (r3 advice finding #4)
-        if not os.environ.get("SPARK_GRAFT_STOP_SPARK_BEFORE_ORACLE"):
-            spark.catalog.clearCache()
+                msgs.append(f"rowcount: spark={len(srows)} duckdb={len(drows)}")
+            if ok:
+                _, sn = normalize(scols, srows)
+                _, dn = normalize(dcols, drows)
+                if sn != dn:
+                    ok = False
+                    diffs = [(a, b) for a, b in zip(sn, dn) if a != b][:3]
+                    msgs.append(f"values differ; first diffs (spark vs duckdb): {diffs}")
+            if ok:
+                print(f"PASS {name} ({len(srows)} rows) [{time.time()-t0:.1f}s]")
+                n_pass += 1
+            else:
+                print(f"FAIL {name}: " + " | ".join(msgs))
+                n_fail += 1
+        finally:
+            # every query releases what it pinned, on every path (SKIP and
+            # error paths included), after its terminal action; what is
+            # still stored afterwards is a leak and fails the sweep
+            if not stopped:
+                release()
+                leaked = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+                if leaked:
+                    print(f"LEAK {name}: {len(leaked)} RDD(s) still stored after release")
+                    n_fail += 1
 
     print(f"\n{n_pass} pass, {n_fail} fail, {n_skip} rows-only of {len(names)}")
     return 1 if n_fail else 0

@@ -19,7 +19,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from bench import HEADLINE  # noqa: E402
 from etl_for_dumdums_spark.catalog import EXTRA_QUERIES, QUERIES, load_all  # noqa: E402
-from etl_for_dumdums_spark.session import get_spark  # noqa: E402
+from etl_for_dumdums_spark.session import get_spark, release  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
 OUT = Path(__file__).resolve().parents[1] / "docs" / "EXPLAINS_HEADLINE.md"
@@ -44,7 +44,7 @@ def main() -> None:
         with redirect_stdout(buf):
             df.explain("formatted")
         sections += [f"## {name}", "", "```", buf.getvalue().rstrip(), "```", ""]
-        spark.catalog.clearCache()
+        release()
     OUT.write_text("\n".join(sections))
     print(f"wrote {OUT} ({len(HEADLINE)} plans)")
 

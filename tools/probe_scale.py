@@ -20,7 +20,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from etl_for_dumdums_spark.catalog import EXTRA_QUERIES, QUERIES, load_all  # noqa: E402
-from etl_for_dumdums_spark.session import get_spark  # noqa: E402
+from etl_for_dumdums_spark.session import get_spark, release  # noqa: E402
 
 # the r4/r5 1000x probe set: the 16 headline queries plus the heaviest
 # order-stat / behavioral consumers
@@ -71,7 +71,7 @@ def main() -> int:
         except Exception as exc:
             print(f"probe: {name} failed: {exc}", file=sys.stderr)
             out[name] = -1.0
-        spark.catalog.clearCache()
+        release()
         print(f"  {name}: {out[name]}s", file=sys.stderr, flush=True)
     print(json.dumps({"sf": args.sf, "runs": args.runs, "queries_sec": out}))
     spark.stop()

@@ -172,7 +172,7 @@ def main() -> int:
                 accounted.add(parts[1].rstrip(":"))
             if line.startswith("PASS "):
                 total_pass += 1
-            elif line.startswith("FAIL "):
+            elif line.startswith(("FAIL ", "LEAK ")):  # LEAK: storage left after release
                 total_fail += 1
             elif line.startswith("SKIP "):
                 total_skip += 1
